@@ -154,23 +154,81 @@ def _prune_stale_cache_entries(fam_dir: str, keep: str = "") -> None:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver table. Plain parquet scan — Catalyst pushes
     predicates and prunes columns from whatever the caller selects.
+    The schema is inferred once per session and file set
+    (``_read_parquet``), so a warm query launches no inference job.
 
-    The events table stores nanosecond timestamps, which the Spark
-    parquet reader rejects; read them as raw longs and convert with
+    The driver corpus stores ``events.ts`` as TIMESTAMP(MICROS). The
+    long branch below is for events files written in nanoseconds:
+    plain epoch-ns longs (the stream fixture, tests/conftest.py
+    ``events_stream_dir``) or TIMESTAMP(NANOS), which Spark surfaces as
+    longs under nanosAsLong (set for the whole session by
+    session.get_spark/tune, not a per-reader toggle). Convert them with
     exact integer division (µs truncation — matching how DuckDB's
     µs-native TIMESTAMP reads the same file).
     """
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
-        # nanosAsLong is set by session.get_spark/tune (session contract,
-        # not a per-reader toggle); every entry point runs one of them.
-        df = spark.read.parquet(path)
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
         if isinstance(df.schema["ts"].dataType, T.LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        return _maybe_fault_inject(df)
-    return _maybe_fault_inject(spark.read.parquet(path))
+    return _maybe_fault_inject(df)
+
+
+# Session confs that change what parquet schema inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+)
+
+
+def _file_identity(path: str) -> tuple:
+    """(name, size, mtime_ns, inode) of ``path`` or, for a dataset
+    directory, of every file below it. Raises OSError when a file
+    cannot be stat'ed."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return ((os.path.basename(path), st.st_size, st.st_mtime_ns,
+                 st.st_ino),)
+
+    def walk_error(err: OSError):
+        raise err
+
+    ident = []
+    for root, _, files in os.walk(path, onerror=walk_error):
+        for f in files:
+            p = os.path.join(root, f)
+            st = os.stat(p)
+            ident.append((os.path.relpath(p, path), st.st_size,
+                          st.st_mtime_ns, st.st_ino))
+    return tuple(sorted(ident))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the inferred schema memoized
+    on the session. Inference runs a Spark job over the parquet
+    footers; a later read of the same files under the same inference
+    confs passes the memoized schema instead and launches none. The
+    key covers the real path, every file's identity (a rewrite at the
+    same path changes size, mtime or inode) and the inference confs.
+    A path that cannot be stat'ed (not local, missing) is inferred on
+    every read."""
+    try:
+        ident = _file_identity(path)
+    except OSError:
+        return spark.read.parquet(path)
+    key = (os.path.realpath(path), ident,
+           tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    memo = vars(spark).setdefault("_parquet_schema_memo", {})
+    schema = memo.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        memo[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
 
 
 def _maybe_fault_inject(df: DataFrame) -> DataFrame:

@@ -70,11 +70,13 @@ def get_spark(app_name: str = "ecommerce_analytics_spark",
     """Build (or fetch) the tuned local SparkSession.
 
     Session contract: spark.sql.legacy.parquet.nanosAsLong is part of
-    the session, not a per-reader toggle — the driver events table
-    stores nanosecond timestamps, and flipping the conf inside a reader
-    would make OTHER tables' behavior depend on read order. It is
-    harmless for non-nanos parquet (only changes how TIMESTAMP(NANOS)
-    columns, which Spark otherwise rejects, are surfaced).
+    the session, not a per-reader toggle — flipping the conf inside a
+    reader would make OTHER tables' behavior depend on read order. The
+    driver corpus stores every timestamp (``events.ts`` too) as
+    TIMESTAMP(MICROS), which the conf leaves alone; it only changes how
+    TIMESTAMP(NANOS) columns, which Spark otherwise rejects, are
+    surfaced: as raw longs, which io.load_table converts for events
+    files written in nanoseconds.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -130,6 +132,17 @@ def get_spark(app_name: str = "ecommerce_analytics_spark",
         .config("spark.driver.maxResultSize", _result_size_cap(driver_mem))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
+        # Generated-class cache (static conf). The stock 100 entries is
+        # below one headline pass (213 distinct classes), so every
+        # class was evicted before reuse and recompiled by Janino each
+        # pass. 1000 holds that working set with room; a full registry
+        # pass is larger and stays cold at this size.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # The cache key is the generated source. AQE numbers
+        # whole-stage-codegen stages in the order query stages finish,
+        # which varies run to run; with the stage id in the class name
+        # the same pipeline under another numbering is a new class.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     # Per-process warehouse isolation for the parallel test runner
     # (tools/run_tests_parallel.py): concurrent pytest workers each get

@@ -21,10 +21,11 @@ Scale + speed notes:
   "time compression" maps to rows-per-microbatch (the reference's
   compression factor chooses wall-clock pacing; a Spark source
   chooses batch size — same knob, pull-based).
-- the events parquet stores nanosecond timestamps; both readers
-  truncate to microseconds exactly like the session-wide
-  nanosAsLong + µs-division convention (io.load_table), so frames
-  from this source are drop-in equal to the parquet scan.
+- the driver events parquet stores ``ts`` as TIMESTAMP(MICROS); for
+  an events file written as TIMESTAMP(NANOS) both readers truncate to
+  microseconds exactly like the nanosAsLong + µs-division branch of
+  io.load_table, so frames from this source are drop-in equal to the
+  parquet scan either way.
 """
 
 from __future__ import annotations

@@ -162,8 +162,9 @@ def test_pagerank_construction_is_lazy(spark, sf_dir):
     try:
         df = query_map()["product_pagerank"](spark, sf_dir)
         jobs = sc.statusTracker().getJobIdsForGroup("pagerank-construct")
-        # ≤1: spark.read.parquet pays one footer/listing job (every
-        # scan does); anything more means eager execution crept back
+        # ≤1: the session's first read of a table pays one footer job
+        # (io.load_table memoizes the schema after it); anything more
+        # means eager execution crept back
         # (.first() ran ~1 job, the old eager checkpoints ran 7+)
         assert len(jobs) <= 1, jobs
     finally:

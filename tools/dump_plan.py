@@ -1,17 +1,20 @@
 """Dump `.explain("formatted")` for registry queries to files.
 
-Captures the physical plan the judge checks optimization claims
-against (plans/r11/<q>_{before,after}.txt). Plan-only — nothing
-executes except queries whose builders fit models / write indexes at
-construction time (same caveat as tools/gen_plan_census.py).
+Captures the physical plan optimization claims are checked against
+(plans/<PLAN_ROUND, default r12>/<q>_{before,after}.txt). Plan-only —
+nothing executes except queries whose builders fit models / write
+indexes at construction time (same caveat as tools/gen_plan_census.py).
 
 Usage::
 
     python tools/dump_plan.py <suffix> <query> [query ...]
-    # writes plans/r11/<query>_<suffix>.txt for each
+    # writes plans/<PLAN_ROUND>/<query>_<suffix>.txt for each
 
-Set PLAN_SF_DIR to override the default /root/testdata/sf0.1 (the
-bench SF, so plan shapes match what the bench times).
+Environment:
+
+- PLAN_SF_DIR: corpus directory, default /root/testdata/sf0.1 (the
+  bench SF, so plan shapes match what the bench times).
+- PLAN_ROUND: output subdirectory of plans/, default r12.
 """
 
 from __future__ import annotations

@@ -389,8 +389,11 @@ def main() -> None:
     for tag, conf in (("rocksdb", ROCKSDB_CONF),
                       ("rocksdb_changelog", ROCKSDB_CHANGELOG_CONF)):
         env = dict(os.environ, SPARK_GRAFT_EXTRA_CONF=conf)
+        # -o addopts= : pytest.ini's default `-m "not heavy"` would
+        # deselect 15 of the 16 files and still exit 0
         proc = subprocess.run(
-            [sys.executable, "-m", "pytest", "-q", *PYTEST_FILES],
+            [sys.executable, "-m", "pytest", "-q", "-o", "addopts=",
+             *PYTEST_FILES],
             env=env, cwd=REPO, capture_output=True, text=True)
         tail = (proc.stdout or "").strip().splitlines()[-1:]
         pytest_recs[tag] = {"exit": proc.returncode, "tail": tail}
