@@ -187,17 +187,17 @@ _INFERENCE_CONFS = (
 
 def _file_identity(path: str) -> tuple:
     """(name, size, mtime_ns, inode) of ``path`` or, for a dataset
-    directory, of every file below it. Raises OSError when a file
-    cannot be stat'ed."""
+    directory, of the directory itself and every file below it. Raises
+    OSError when a file cannot be stat'ed."""
+    st = os.stat(path)
     if not os.path.isdir(path):
-        st = os.stat(path)
         return ((os.path.basename(path), st.st_size, st.st_mtime_ns,
                  st.st_ino),)
 
     def walk_error(err: OSError):
         raise err
 
-    ident = []
+    ident = [(".", 0, st.st_mtime_ns, st.st_ino)]
     for root, _, files in os.walk(path, onerror=walk_error):
         for f in files:
             p = os.path.join(root, f)
@@ -235,12 +235,13 @@ def _maybe_fault_inject(df: DataFrame) -> DataFrame:
     """Harness-only task-failure injection (off unless the
     ``SPARK_GRAFT_FAULT_INJECT`` env var is set — never in any engine
     path). A 100 TB job re-executes thousands of tasks; the retry wave
-    (tools/retry_wave.py) certifies every result is replay-invariant
-    by failing the FIRST attempt of every third scan task and diffing
-    value hashes against the quiet run. The wrapper is a pass-through
-    mapInPandas, so retried attempts see bit-identical input; it
-    deliberately sits above the scan (pushdown is sacrificed — this
-    mode certifies correctness, not plans) and requires a
+    (``tools/certify.py retry``) certifies every result is
+    replay-invariant by failing the FIRST attempt of every third scan
+    task and diffing value hashes against a quiet baseline sweep. The
+    wrapper is a pass-through mapInPandas, so retried attempts see
+    bit-identical input; it deliberately sits above the scan (pushdown
+    is sacrificed — this mode certifies correctness, not plans) and
+    requires a
     retry-tolerant master (session honors SPARK_GRAFT_TASK_RETRIES,
     since plain local[N] kills the job on any task failure)."""
     if not os.environ.get("SPARK_GRAFT_FAULT_INJECT"):
@@ -401,7 +402,22 @@ def write_bucketed_table(df: DataFrame, table: str,
     writer.saveAsTable(table)
 
 
-_BUCKET_ROWS_CACHE: dict = {}
+_ROW_COUNTS: dict = {}
+
+
+def row_count(path: str, count) -> int:
+    """``count()`` memoized per process on the real path and file
+    identity of ``path`` (``_file_identity``): a rewrite at the same
+    path changes size, mtime or inode and counts again. A path that
+    cannot be stat'ed (not local, missing) is counted on every call."""
+    try:
+        key = (os.path.realpath(path), _file_identity(path))
+    except OSError:
+        return count()
+    rows = _ROW_COUNTS.get(key)
+    if rows is None:
+        rows = _ROW_COUNTS[key] = count()
+    return rows
 
 
 def bucket_count(rows: int) -> int:
@@ -439,24 +455,15 @@ def bucketed_lineitem(spark: SparkSession, sf_dir: str,
     import hashlib
 
     if n_buckets is None:
-        # bucket_count ratio contract; the row count is memoized per
-        # (corpus path, lineitem mtime) — it's a parquet metadata read,
-        # but at min-of-7 bench cadence even ~0.2s per call shows up as
-        # a fake serve-side regression. The mtime in the key invalidates
-        # the memo if a corpus dir (e.g. a /tmp scale dir) is
-        # regenerated at a different scale within one process, which
-        # would otherwise mis-size the layout silently (ADVICE r9).
-        rp = os.path.realpath(sf_dir)
-        li = os.path.join(rp, "lineitem.parquet")
-        try:
-            mt = os.stat(li).st_mtime_ns
-        except OSError:
-            mt = 0
-        ck = (rp, mt)
-        rows = _BUCKET_ROWS_CACHE.get(ck)
-        if rows is None:
-            rows = load_table(spark, sf_dir, "lineitem").count()
-            _BUCKET_ROWS_CACHE[ck] = rows
+        # bucket_count ratio contract; the row count is memoized on
+        # lineitem's file identity (row_count) — it's a parquet
+        # metadata read, but at min-of-7 bench cadence even ~0.2s per
+        # call shows up as a fake serve-side regression. A corpus dir
+        # regenerated at another scale within one process counts again
+        # instead of mis-sizing the layout silently (ADVICE r9).
+        rows = row_count(
+            os.path.join(sf_dir, "lineitem.parquet"),
+            lambda: load_table(spark, sf_dir, "lineitem").count())
         n_buckets = bucket_count(rows)
 
     key = hashlib.md5(

@@ -39,7 +39,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ecommerce_analytics_spark.io import load_table
+from ecommerce_analytics_spark.io import load_table, row_count
 from ecommerce_analytics_spark.operators.similarity import (
     KMEANS_RECALL_FLOOR, N_CENTROIDS, N_QUERIES, TOP_K, dot,
     kmeans_probe_count, knn_exact_baseline, norm,
@@ -49,28 +49,14 @@ from ecommerce_analytics_spark.plans.registry import query
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
 
-# Serve-path corpus-count memo, keyed on (cells path, mtime_ns). The
-# recommended refresh is a blue/green rebuild to a FRESH path (module
-# docstring), but build_ann_index writes mode('overwrite') to the
-# deterministic ann_index_path, so an in-place rebuild after corpus
-# regeneration IS reachable — a path-only key would then serve a stale
-# count and mis-size kmeans_probe_count (ADVICE r10). The mtime of the
-# cells dir changes on every overwrite, invalidating the memo exactly
-# when the index does; mirrors io._BUCKET_ROWS_CACHE.
-_CELLS_ROWS_CACHE: dict[tuple[str, int], int] = {}
-
-
 def _cells_rows(cells, cells_dir: str) -> int:
-    try:
-        mtime = os.stat(cells_dir).st_mtime_ns
-    except OSError:
-        mtime = -1  # non-local FS — fall through to a fresh count
-    key = (cells_dir, mtime)
-    rows = _CELLS_ROWS_CACHE.get(key)
-    if rows is None:
-        rows = cells.count()  # parquet-metadata read, once per index
-        _CELLS_ROWS_CACHE[key] = rows
-    return rows
+    """Corpus row count of the index's cells, memoized on the cells
+    dir's file identity (io.row_count). build_ann_index writes
+    mode('overwrite') to the deterministic ann_index_path, so an
+    in-place rebuild after corpus regeneration is reachable; it changes
+    the identity, and a stale count would mis-size kmeans_probe_count
+    (ADVICE r10)."""
+    return row_count(cells_dir, cells.count)
 
 
 def ann_index_path(sf_dir: str) -> str:

@@ -83,13 +83,13 @@ def get_spark(app_name: str = "ecommerce_analytics_spark",
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM",
                                 _default_driver_mem())
     # local[N] hard-codes maxFailures=1 (any task failure kills the
-    # job); the retry-invariance wave (tools/retry_wave.py) needs the
+    # job); the retry-invariance wave (tools/certify.py retry) needs the
     # cluster behavior — failed tasks re-attempted — which local mode
     # only offers through the local[N,F] master form.
     retries = os.environ.get("SPARK_GRAFT_TASK_RETRIES")
     master = f"local[{cpus},{int(retries)}]" if retries else f"local[{cpus}]"
     # Harness hook: a full master override. The local-cluster wave
-    # (tools/localcluster_wave.py) certifies the registry under
+    # (tools/certify.py localcluster) certifies the registry under
     # ``local-cluster[n,cores,mem_mb]`` — separate executor JVMs, real
     # task/closure serialization, RPC broadcast, network shuffle fetch —
     # the process boundaries local[N] never crosses. Executor JVMs do

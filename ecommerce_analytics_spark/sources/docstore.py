@@ -92,7 +92,7 @@ def _json_default(v):
         # TimestampType.fromInternal = datetime.fromtimestamp(...) —
         # a NAIVE datetime in the OS-LOCAL zone. Serializing that
         # naive wall clock made the stored document depend on the
-        # host's TZ (caught by tools/tz_wave.py: session_start/end
+        # host's TZ (caught by certify.py tz: session_start/end
         # shifted 5h under TZ=America/New_York; it was masked before
         # round 11 by the sim source's symmetric inverse leak).
         # Re-anchor explicitly: interpret naive as system-local

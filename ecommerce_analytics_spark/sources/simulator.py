@@ -146,7 +146,7 @@ class _SimStreamReader(SimpleDataSourceStreamReader):
         (time.mktime) but an aware one in its own zone (timegm) —
         under a non-UTC OS timezone the naive form silently shifted
         every replayed event by the UTC offset (caught by
-        tools/tz_wave.py: stream_pipeline_e2e window starts moved
+        tools/certify.py tz: stream_pipeline_e2e window starts moved
         4-5h under TZ=America/New_York while the arrow-batch reader
         and every JVM path stayed put)."""
         t = self._sorted_table()

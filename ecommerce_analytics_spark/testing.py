@@ -112,7 +112,7 @@ def value_hash(pdf: pd.DataFrame, float_sig: int | None = None) -> str:
     sorted (column names, normalized row multiset). Two runs of the
     same query agree on ``value_hash`` iff they agree under
     ``compare_frames`` — used by the input-layout invariance wave
-    (tools/roworder_wave.py) to diff results across physically
+    (``tools/certify.py roworder``) to diff results across physically
     permuted copies of the same tables, where the oracle alone can't
     see run-to-run nondeterminism (both engines reread the same dir)."""
     import hashlib

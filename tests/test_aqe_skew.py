@@ -1,8 +1,8 @@
 """AQE skew-join-FIRED invariance (round 9 — VERDICT r8 #1).
 
-The full-registry version of this gate is tools/aqeskew_wave.py (two
-sweeps on the skewed fixture, artifact AQESKEW_r9.json). This pytest
-keeps the always-on core:
+The full-registry version of this gate is ``tools/certify.py aqeskew``
+(two sweeps on the skewed fixture, artifact AQESKEW_r9.json). This
+pytest keeps the always-on core:
 
 * a canary proving ``OptimizeSkewedJoin`` REALLY fires under the
   wave's lowered thresholds — the r7 tie-pairing defect class was

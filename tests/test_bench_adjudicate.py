@@ -9,6 +9,9 @@ ann_index serve-path memo invalidation.
 - Round artifacts must sort NUMERICALLY ('r10' < 'r6' lexically).
 - ``ann_index._cells_rows`` must refresh its memo when the cells dir
   is overwritten in place (mtime change), not serve a stale count.
+- ``io.row_count``, the memo behind it and ``io.bucketed_lineitem``,
+  keys on the file identity and counts every time a path cannot be
+  stat'ed.
 """
 import os
 import subprocess
@@ -132,3 +135,24 @@ def test_cells_rows_memo_invalidates_on_overwrite(tmp_path):
     os.utime(str(d), ns=(1, 1))  # force a distinct mtime_ns
     assert ann_index._cells_rows(fake, str(d)) == 250
     assert fake.calls == 2
+
+
+def test_row_count_memo_follows_file_identity(tmp_path):
+    from ecommerce_analytics_spark import io
+
+    f = tmp_path / "lineitem.parquet"
+    f.write_bytes(b"x" * 10)
+    fake = _FakeCells()
+    assert io.row_count(str(f), fake.count) == 100
+    assert io.row_count(str(f), fake.count) == 100
+    assert fake.calls == 1  # same identity: no recount
+
+    fake.rows = 250
+    f.write_bytes(b"y" * 20)  # rewrite at the same path
+    assert io.row_count(str(f), fake.count) == 250
+    assert fake.calls == 2
+
+    gone = str(tmp_path / "missing.parquet")
+    assert io.row_count(gone, fake.count) == 250
+    assert io.row_count(gone, fake.count) == 250
+    assert fake.calls == 4  # unstat-able: counted on every call

@@ -1,5 +1,5 @@
 """Always-on pytest gate for the multi-JVM local-cluster wave
-(tools/localcluster_wave.py, LOCALCLUSTER_r11.json): a fresh
+(``tools/certify.py localcluster``, LOCALCLUSTER_r11.json): a fresh
 subprocess runs a 2-executor ``local-cluster`` session — separate
 executor JVMs, real task/closure serialization, RPC broadcast,
 network shuffle fetch — proves the process boundary exists (>= 2
@@ -19,7 +19,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_localcluster_gate_matches_single_jvm(spark, sf_dir):
-    from tools.localcluster_wave import GATE_QUERIES
+    from tools.certify import GATE_QUERIES
     from ecommerce_analytics_spark.plans.registry import query_map
     from ecommerce_analytics_spark.testing import value_hash
 
@@ -29,8 +29,8 @@ def test_localcluster_gate_matches_single_jvm(spark, sf_dir):
         f"spark.executor.memory=3g;"
         f"spark.executorEnv.PYTHONPATH={REPO}")
     proc = subprocess.run(
-        [sys.executable, f"{REPO}/tools/localcluster_wave.py",
-         "--gate-worker", sf_dir],
+        [sys.executable, f"{REPO}/tools/certify.py", "--worker", "probe",
+         sf_dir],
         env=env, cwd=REPO, capture_output=True, text=True, timeout=900)
     rec = {}
     for line in (proc.stdout or "").splitlines():

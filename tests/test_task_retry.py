@@ -1,8 +1,8 @@
 """Task-retry (replay) invariance — round 9 (VERDICT r8 #2).
 
-The full-registry gate is tools/retry_wave.py (quiet vs injected
-sweeps, artifact RETRY_r9.json). This pytest keeps the always-on
-core: a fresh subprocess session built with ``SPARK_GRAFT_FAULT_
+The full-registry gate is ``tools/certify.py retry`` (an injected
+sweep against the quiet baseline sweep, artifact RETRY_r9.json). This
+pytest keeps the always-on core: a fresh subprocess session built with ``SPARK_GRAFT_FAULT_
 INJECT=1`` (every driver-table scan fails its first attempt on every
 third task — io._maybe_fault_inject) and ``SPARK_GRAFT_TASK_
 RETRIES=4`` (local[N,4], since plain local[N] kills the job on any
@@ -11,7 +11,7 @@ shared session for queries spanning every scanned table.
 
 Speculation itself is cluster-only (TaskSchedulerImpl starts the
 speculation thread only on non-local backends — probed empirically in
-tools/retry_wave.py); failed-then-retried attempts exercise the same
+tools/certify.py); failed-then-retried attempts exercise the same
 correctness surface: the same input partition computed more than
 once, one attempt's output winning.
 """

@@ -1,5 +1,5 @@
 """Always-on pytest gate for the OS-timezone hostility wave
-(tools/tz_wave.py, TZWAVE_r11.json): the DST-transition fixture runs
+(``tools/certify.py tz``, TZWAVE_r11.json): the DST-transition fixture runs
 in a fresh process with ``TZ=America/New_York`` exported — JVM,
 Python, and DuckDB all inherit the hostile zone — and every observed
 hour bucket, window boundary, date_format, and unix round-trip must
@@ -19,7 +19,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_dst_fixture_under_hostile_os_tz():
-    from tools.tz_wave import run_dst_fixture
+    from tools.certify import run_dst_fixture
     rec, failures = run_dst_fixture()
     assert not failures, failures
     assert rec["os_tz"] == "America/New_York"

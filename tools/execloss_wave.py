@@ -48,17 +48,10 @@ import tempfile
 import time
 
 REPO = str(pathlib.Path(__file__).resolve().parents[1])
-sys.path.insert(0, REPO)
+sys.path[:0] = [REPO, os.path.join(REPO, "tools")]
 
-MASTER = "local-cluster[2,8,8192]"
-LC_CONF = (f"spark.executor.memory=6g;"
-           f"spark.executorEnv.PYTHONPATH={REPO}")
-ROCKSDB_CHANGELOG_CONF = (
-    "spark.sql.streaming.stateStore.providerClass="
-    "org.apache.spark.sql.execution.streaming.state."
-    "RocksDBStateStoreProvider;"
-    "spark.sql.streaming.stateStore.rocksdb."
-    "changelogCheckpointing.enabled=true")
+from certify import LC_CONF, MASTER  # noqa: E402
+from rocksdb_wave import ROCKSDB_CHANGELOG_CONF  # noqa: E402
 
 
 # --------------------------------------------------------------- workers

@@ -366,22 +366,14 @@ def main() -> None:
     # ---- oracle leg: the two e2e registry queries vs DuckDB under
     # both RocksDB configs (the driver's own comparison, through the
     # production backends)
+    from certify import sweep
     sweep_recs = {}
     for tag, conf in (("rocksdb", ROCKSDB_CONF),
                       ("rocksdb_changelog", ROCKSDB_CHANGELOG_CONF)):
-        sweep_art = f"{tmp}/sweep_e2e_{tag}.json"
-        env = dict(os.environ, SPARK_GRAFT_EXTRA_CONF=conf,
-                   SWEEP_JSON_OUT=sweep_art)
-        env.pop("SWEEP_JSON_MERGE", None)
-        proc = subprocess.run(
-            [sys.executable, f"{REPO}/tools/sweep.py",
-             "/root/testdata/sf0.01",
-             "stream_pipeline_e2e", "stream_sessionize_e2e"],
-            env=env, cwd=REPO)
-        if os.path.exists(sweep_art):
-            with open(sweep_art) as f:
-                sweep_recs[tag] = json.load(f)
-        if proc.returncode != 0:
+        sweep_recs[tag] = sweep(
+            "/root/testdata/sf0.01", {"SPARK_GRAFT_EXTRA_CONF": conf},
+            names=("stream_pipeline_e2e", "stream_sessionize_e2e"))
+        if not all(r["ok"] for r in sweep_recs[tag].values()):
             failures.append(f"e2e oracle sweep under {tag} failed")
 
     # ---- pytest leg: full streaming parity subset under both configs

@@ -5,8 +5,8 @@ AQE paths changing row pairing", yet no gate had ever made
 ``OptimizeSkewedJoin`` actually fire: the driver tables are uniform,
 so AQE's skew splitter never triggers on them at any conf. This
 fixture manufactures the trigger — hot keys big enough that, with the
-skew thresholds lowered (tools/aqeskew_wave.py), Spark really splits
-the skewed partitions and replays the other side per split.
+skew thresholds lowered (``tools/certify.py aqeskew``), Spark really
+splits the skewed partitions and replays the other side per split.
 
 Unlike tests/hostile_retail_fixture.py this copy is VALUE-CLEAN: no
 NULLs, no negatives, no conflicting duplicates — the only hostility is

@@ -205,8 +205,8 @@ def main() -> int:
             # Wave hook: SWEEP_PLAN_GREP=pat1,pat2 records how often
             # each pattern appears in the POST-EXECUTION formatted plan
             # (so AQE-final markers like "skew=true" are visible) —
-            # lets tools/aqeskew_wave.py prove the path under test
-            # actually fired, not just that confs were set.
+            # lets ``tools/certify.py aqeskew`` prove the path under
+            # test actually fired, not just that confs were set.
             if os.environ.get("SWEEP_PLAN_GREP"):
                 try:
                     plan = spark._sc._jvm.PythonSQLUtils.explainString(
