@@ -131,6 +131,10 @@ def get_spark(app_name: str = "ecommerce_analytics_spark",
         # maxResultSize error instead of OOM-killing the JVM.
         .config("spark.driver.maxResultSize", _result_size_cap(driver_mem))
         .config("spark.ui.enabled", "false")
+        # No console progress bars: sweep and certify logs interleave
+        # per-query JSON records with stderr, and one retry-wave log
+        # held 302 `[Stage …]` lines between them.
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
         # Generated-class cache (static conf). The stock 100 entries is
         # below one headline pass (213 distinct classes), so every

@@ -1,44 +1,34 @@
-"""Document-store sink as a Python DataSource writer (reference
-parity: DataStorage's MongoDB collections).
+"""Document-store sink (reference parity: DataStorage's MongoDB
+collections).
 
 The reference lands every enriched event in MongoDB and trusts the
 driver's insert acks. A lake engine wants the same "documents in, no
 partial batches visible" contract on plain files, which is a COMMIT
-PROTOCOL, not a database: every task writes its rows to a private
-staging file and returns the filename as its commit message; only the
-driver-side ``commit`` publishes those filenames into a manifest.
-Readers resolve manifests first, so:
+PROTOCOL, not a database: ``write_docstore`` has Spark's native JSON
+writer write each commit attempt into its own staging directory, and
+only then does the driver publish that directory's part files in a
+manifest. Readers resolve manifests first, so:
 
-- a failed/speculative task attempt leaves at most an orphan staging
-  file that no manifest references (invisible to readers);
-- ``abort`` removes the attempt's staging files eagerly;
-- the STREAMING writer publishes one manifest per epoch, keyed by
-  batch id and written atomically (tmp + rename): a replayed
-  micro-batch overwrites its own manifest instead of double-
-  publishing — the same idempotent-sink recipe as
-  streaming/incremental_admit, here at the sink-protocol layer.
+- a failed job or task attempt leaves at most an orphan staging
+  directory that no manifest references (invisible to readers;
+  ``vacuum_docstore`` removes it);
+- the STREAMING path (foreachBatch) publishes one manifest per epoch,
+  keyed by batch id and written atomically (tmp + rename): a replayed
+  micro-batch writes a fresh staging directory and overwrites its own
+  manifest instead of double-publishing — the same idempotent-sink
+  recipe as streaming/incremental_admit, here at the sink-protocol
+  layer.
 
-Rows serialize as JSON lines (timestamps → ISO-8601), the document
-shape the reference stores; ``read_docstore`` parses them back with a
-caller-provided schema via Spark's native JSON reader.
+Rows serialize as JSON lines with microsecond ISO-8601 timestamps in
+the session timezone, the document shape the reference stores;
+``read_docstore`` parses them back with a caller-provided schema via
+Spark's native JSON reader. No Python process touches the rows.
 """
 
 from __future__ import annotations
 
-import datetime
 import json
 import os
-
-from pyspark.sql.datasource import (
-    DataSource, DataSourceStreamWriter, DataSourceWriter,
-    WriterCommitMessage,
-)
-
-
-class _FileCommit(WriterCommitMessage):
-    def __init__(self, filename: str):
-        self.filename = filename
-
 
 # Store layout versions (persisted in a `_format_version` file at the
 # store root, written atomically by the first driver-side commit):
@@ -86,54 +76,12 @@ def _ensure_version_file(path: str) -> None:
     os.replace(tmp, vf)
 
 
-def _json_default(v):
-    if isinstance(v, datetime.datetime):
-        # Rows reaching a Python sink were converted by PySpark's
-        # TimestampType.fromInternal = datetime.fromtimestamp(...) —
-        # a NAIVE datetime in the OS-LOCAL zone. Serializing that
-        # naive wall clock made the stored document depend on the
-        # host's TZ (caught by certify.py tz: session_start/end
-        # shifted 5h under TZ=America/New_York; it was masked before
-        # round 11 by the sim source's symmetric inverse leak).
-        # Re-anchor explicitly: interpret naive as system-local
-        # (fold-aware, so DST-ambiguous instants round-trip exactly),
-        # convert to UTC, store the UTC wall clock — read_docstore
-        # parses it under the session's UTC pin.
-        if v.tzinfo is None:
-            v = v.astimezone()
-        return v.astimezone(datetime.timezone.utc) \
-                .replace(tzinfo=None).isoformat()
-    if isinstance(v, datetime.date):
-        return v.isoformat()
-    raise TypeError(f"not JSON-serializable: {type(v)}")
-
-
-def _write_staging(path: str, rows, suffix: str) -> _FileCommit:
-    from pyspark import TaskContext
-    ctx = TaskContext.get()
-    # taskAttemptId is unique across the app (partition ids restart
-    # every micro-batch — using them alone makes epochs overwrite each
-    # other's staging files)
-    fname = (f"part-{ctx.partitionId():05d}-"
-             f"tid{ctx.taskAttemptId()}-{suffix}.jsonl")
-    staged = os.path.join(path, "_staging", fname)
-    os.makedirs(os.path.dirname(staged), exist_ok=True)
-    n = 0
-    with open(staged, "w") as f:
-        for row in rows:
-            f.write(json.dumps(row.asDict(recursive=True),
-                               default=_json_default) + "\n")
-            n += 1
-    return _FileCommit(fname)
-
-
-def _publish(path: str, manifest_name: str, messages) -> None:
+def _publish(path: str, manifest_name: str, files: list[str]) -> None:
     """Atomically publish the committed file list (tmp + rename).
     Driver-side only. Also stamps the store's `_format_version` on
     first commit (a pre-existing stamp is never rewritten)."""
     os.makedirs(path, exist_ok=True)
     _ensure_version_file(path)
-    files = [m.filename for m in messages if m is not None]
     final = os.path.join(path, manifest_name)
     tmp = final + ".tmp"
     with open(tmp, "w") as f:
@@ -141,71 +89,37 @@ def _publish(path: str, manifest_name: str, messages) -> None:
     os.replace(tmp, final)
 
 
-class _DocStoreBatchWriter(DataSourceWriter):
-    def __init__(self, options):
-        self.path = options["path"]
+def write_docstore(df, path: str, batch_id: int | None = None) -> None:
+    """Commit ``df`` to the store at ``path`` as one manifest version.
 
-    def write(self, iterator):
-        return _write_staging(self.path, iterator, "batch")
+    Spark's JSON writer writes this attempt's own staging directory
+    (``_staging/<random attempt id>/``); a failed job raises before
+    anything is published. The manifest then lists the directory's
+    part files. ``batch_id`` is a streaming epoch (the foreachBatch
+    argument): the manifest is keyed by it, so a replayed epoch
+    overwrites its own. Without it (a batch write) the manifest tag is
+    the zero-padded commit time in nanoseconds plus the attempt id's
+    first 8 hex digits: lexicographic manifest order IS commit order
+    (what ``as_of`` time travel pins); the suffix only breaks ties
+    between genuinely concurrent commits, whose relative order is
+    inherently unspecified.
 
-    def commit(self, messages):
-        # unique manifest per job so mode("append") jobs compose; the
-        # job's own commit stays atomic via the tmp+rename in _publish.
-        # Tag = zero-padded commit nanos + random suffix: lexicographic
-        # manifest order IS commit order (what as_of time travel pins);
-        # the suffix only breaks ties between genuinely concurrent
-        # commits, whose relative order is inherently unspecified.
-        import binascii
-        import time
-        tag = (f"{time.time_ns():020d}-"
-               + binascii.hexlify(os.urandom(4)).decode())
-        _publish(self.path, f"_manifest-batch-{tag}.json", messages)
+    Timestamps are written with microseconds (the wire format); the
+    writer's default pattern keeps only milliseconds."""
+    import time
+    import uuid
 
-    def abort(self, messages):
-        for m in messages:
-            if m is not None:
-                try:
-                    os.remove(os.path.join(self.path, "_staging",
-                                           m.filename))
-                except OSError:
-                    pass
-
-
-class _DocStoreStreamWriter(DataSourceStreamWriter):
-    def __init__(self, options):
-        self.path = options["path"]
-
-    def write(self, iterator):
-        return _write_staging(self.path, iterator, "stream")
-
-    def commit(self, messages, batchId):
-        # keyed by batch id: a replayed epoch overwrites its own
-        # manifest — idempotent publication
-        _publish(self.path, f"_manifest-{batchId:010d}.json", messages)
-
-    def abort(self, messages, batchId):
-        for m in messages:
-            if m is not None:
-                try:
-                    os.remove(os.path.join(self.path, "_staging",
-                                           m.filename))
-                except OSError:
-                    pass
-
-
-class DocStoreDataSource(DataSource):
-    """format("docstore"): manifest-committed JSON-lines document sink
-    (batch + streaming). Option: path (required)."""
-
-    @classmethod
-    def name(cls):
-        return "docstore"
-
-    def writer(self, schema, overwrite):
-        return _DocStoreBatchWriter(self.options)
-
-    def streamWriter(self, schema, overwrite):
-        return _DocStoreStreamWriter(self.options)
+    from ecommerce_analytics_spark.streaming.e2e_pipeline import WIRE_TS_FMT
+    attempt = uuid.uuid4().hex
+    out = os.path.join(path, "_staging", attempt)
+    df.write.option("timestampFormat", WIRE_TS_FMT).json(out)
+    files = sorted(f"{attempt}/{f}" for f in os.listdir(out)
+                   if f.startswith("part-"))
+    if batch_id is None:
+        manifest = f"_manifest-batch-{time.time_ns():020d}-{attempt[:8]}.json"
+    else:
+        manifest = f"_manifest-{batch_id:010d}.json"
+    _publish(path, manifest, files)
 
 
 def docstore_versions(path: str) -> list[str]:
@@ -298,17 +212,6 @@ def read_docstore(spark, path: str, schema: str,
     return spark.read.schema(schema).json(files)
 
 
-def register_docstore_sink(spark) -> None:
-    try:
-        import sys
-
-        from pyspark import cloudpickle
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    except Exception:
-        pass
-    spark.dataSource.register(DocStoreDataSource)
-
-
 def _register_query() -> None:
     from pyspark.sql import DataFrame, SparkSession
     from pyspark.sql import functions as F
@@ -326,7 +229,7 @@ def _register_query() -> None:
         FROM events GROUP BY event_type
         """,
         doc="End-to-end certification of the docstore sink + reader: "
-            "events are WRITTEN through format('docstore') into a "
+            "events are WRITTEN through write_docstore into a "
             "per-run tmp store (manifest-commit protocol, JSON-lines "
             "documents, ISO timestamps) and read back via the "
             "manifest-resolved file list; the rollup over the "
@@ -340,12 +243,10 @@ def _register_query() -> None:
                                     sf_dir: str) -> DataFrame:
         import os
         import tempfile
-        register_docstore_sink(spark)
         out = os.path.join(
             tempfile.mkdtemp(prefix="docstore_run_"), "store")
         events = load_table(spark, sf_dir, "events").drop("props")
-        (events.write.format("docstore").option("path", out)
-         .mode("append").save())
+        write_docstore(events, out)
         back = read_docstore(
             spark, out,
             "event_id bigint, ts timestamp, user_id bigint, "
@@ -360,22 +261,30 @@ _register_query()
 
 
 def vacuum_docstore(path: str) -> dict[str, int]:
-    """Lakehouse-style maintenance: delete staging files no manifest
-    references (failed attempts, epochs superseded by idempotent
-    republication). Safe under the commit protocol — readers only
-    ever resolve manifest-listed files, so removing orphans cannot
-    change any query result. Returns {"kept": n, "removed": n}."""
+    """Lakehouse-style maintenance: delete the staging entries no
+    manifest references — attempt directories of failed jobs or of
+    epochs superseded by idempotent republication, and stray files.
+    Safe under the commit protocol — readers only ever resolve
+    manifest-listed files, so removing orphans cannot change any query
+    result. Run it when no write is in flight: an attempt that has not
+    published yet is an orphan too. Returns {"kept": n, "removed": n}
+    staging entries."""
+    import shutil
     staging = os.path.join(path, "_staging")
     if not os.path.isdir(staging):
         return {"kept": 0, "removed": 0}
-    live = set(committed_files(path))
+    live = {f.split("/")[0] for f in committed_files(path)}
     kept = removed = 0
-    for fname in os.listdir(staging):
-        if fname in live:
+    for entry in os.listdir(staging):
+        if entry in live:
             kept += 1
+            continue
+        orphan = os.path.join(staging, entry)
+        if os.path.isdir(orphan):
+            shutil.rmtree(orphan)
         else:
-            os.remove(os.path.join(staging, fname))
-            removed += 1
+            os.remove(orphan)
+        removed += 1
     return {"kept": kept, "removed": removed}
 
 

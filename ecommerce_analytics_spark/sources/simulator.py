@@ -1,55 +1,42 @@
-"""Event-replay Python DataSource (reference parity: event_simulator).
+"""Event replay (reference parity: event_simulator).
 
 The reference's ingest front door is a Python script that loads an
 events file, sorts it by timestamp, and replays it into Kafka with a
 time-compression factor (event_simulator.py:100-160: load_events /
-simulate). The Spark-4-native analog is a first-class *Python
-DataSource*: ``spark.read.format("sim_events")`` for the batch
-surface and ``spark.readStream.format("sim_events")`` for the
-deterministic time-ordered replay — no broker required, offsets
-checkpointable, exactly the micro-batch semantics the streaming
-pipeline consumes in production behind Kafka.
+simulate). Here the replay has two surfaces:
 
-Scale + speed notes:
-- the BATCH reader yields pyarrow RecordBatches (the vectorized
-  Python-source path — rows never materialize as Python objects) and
-  splits the file into row-group-aligned partitions so a cluster
-  reads fragments in parallel;
-- the STREAM reader is a SimpleDataSourceStreamReader whose offset is
-  the row index into the (ts, event_id)-sorted order: replay is
-  deterministic, restarts resume from the checkpointed offset, and
-  "time compression" maps to rows-per-microbatch (the reference's
-  compression factor chooses wall-clock pacing; a Spark source
-  chooses batch size — same knob, pull-based).
-- the driver events parquet stores ``ts`` as TIMESTAMP(MICROS); for
-  an events file written as TIMESTAMP(NANOS) both readers truncate to
-  microseconds exactly like the nanosAsLong + µs-division branch of
-  io.load_table, so frames from this source are drop-in equal to the
-  parquet scan either way.
+- ``spark.read.format("sim_events")``: a Python DataSource batch scan.
+  It yields pyarrow RecordBatches (the vectorized Python-source path —
+  rows never materialize as Python objects) and splits the file into
+  row-range partitions so a cluster reads fragments in parallel;
+- ``write_replay``: the deterministic time-ordered replay as parquet
+  files, one micro-batch each, for Spark's own file-stream source
+  (streaming/windows.streaming_events with ``maxFilesPerTrigger=1``
+  under ``Trigger.AvailableNow``). Replay order is file order, a
+  restart resumes from the source's checkpointed file log, and "time
+  compression" maps to rows per file (the reference's compression
+  factor chooses wall-clock pacing; a replay chooses batch size — same
+  knob, pull-based). No Python process runs on the stream path.
+
+The driver events parquet stores ``ts`` as TIMESTAMP(MICROS); for an
+events file written as TIMESTAMP(NANOS) both surfaces truncate to
+microseconds exactly like the nanosAsLong + µs-division branch of
+io.load_table, so their frames are drop-in equal to the parquet scan
+either way.
 """
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
     DataSource, DataSourceReader, InputPartition,
-    SimpleDataSourceStreamReader,
 )
 
 SIM_SCHEMA = ("event_id bigint, ts timestamp, user_id bigint, "
               "event_type string, value double, props string")
 _COLS = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-
-
-def _as_utc(dt):
-    """Naive driver-table timestamps are UTC wall clocks (session pin);
-    make that explicit so PySpark's datetime→Catalyst conversion never
-    consults the OS timezone (naive goes through time.mktime)."""
-    import datetime
-    if dt is not None and dt.tzinfo is None:
-        return dt.replace(tzinfo=datetime.timezone.utc)
-    return dt
 
 
 def _num_rows(path: str) -> int:
@@ -58,8 +45,6 @@ def _num_rows(path: str) -> int:
     mixed writers) — the same by-name/any-layout reader contract every
     other scan in the package honors; found by the round-8
     mixed-writer wave when ``pq.ParquetFile(dir)`` crashed here."""
-    import os
-
     import pyarrow.parquet as pq
     if os.path.isdir(path):
         return sum(
@@ -107,88 +92,72 @@ class _SimBatchReader(DataSourceReader):
 
 
 SENTINEL_EVENT_TYPE = "__end_of_replay__"
+SENTINEL_DAYS = 30
 
 
-class _SimStreamReader(SimpleDataSourceStreamReader):
-    def __init__(self, options):
-        self.path = options["path"]
-        self.batch_rows = int(options.get("batch_rows", "10000"))
-        # end-of-replay punctuation: a single synthetic row N days past
-        # the last real event, emitted as the final offset. A finite
-        # replay feeding a watermarked aggregation needs it — the
-        # watermark only advances on observed event time, so without a
-        # closing row the last real windows sit in state forever. The
-        # sentinel pushes the watermark past every real window; its OWN
-        # window never closes, so it never appears in append output.
-        self.sentinel_days = int(options.get("sentinel_days", "0"))
-        self._table = None  # lazy; sorted once per reader instance
+def _with_sentinel(t):
+    """``t`` plus the end-of-replay punctuation: one synthetic row
+    SENTINEL_DAYS past the last real event. A finite replay feeding a
+    watermarked aggregation needs it — the watermark only advances on
+    observed event time, so without a closing row the last real
+    windows sit in state forever. The sentinel pushes the watermark
+    past every real window; its OWN window never closes, so it never
+    appears in append output. It is valid on the wire, so it is never
+    dead-lettered either."""
+    import datetime
 
-    def _sorted_table(self):
-        if self._table is None:
-            t = _load_arrow(self.path)
-            self._table = t.sort_by([("ts", "ascending"),
-                                     ("event_id", "ascending")])
-        return self._table
+    import pyarrow as pa
+    ts = t.column("ts")[t.num_rows - 1].as_py() \
+        + datetime.timedelta(days=SENTINEL_DAYS)
+    row = pa.table({"event_id": [-1], "ts": [ts], "user_id": [-1],
+                    "event_type": [SENTINEL_EVENT_TYPE], "value": [0.0],
+                    "props": [None]}, schema=t.schema)
+    return pa.concat_tables([t, row])
 
-    def _sentinel_row(self, t):
-        import datetime
-        max_ts = t.column("ts")[t.num_rows - 1].as_py()
-        ts = _as_utc(max_ts + datetime.timedelta(days=self.sentinel_days))
-        return (-1, ts, -1, SENTINEL_EVENT_TYPE, 0.0, None)
 
-    def _slice(self, lo, hi):
-        """Rows for logical offsets [lo, hi); index num_rows is the
-        sentinel when enabled.
+def write_replay(events_path: str, replay_dir: str,
+                 batch_rows: int) -> list[str]:
+    """Write the (ts, event_id)-sorted events plus the sentinel (at
+    row index n) as parquet files of ``batch_rows`` rows: file k holds
+    replay rows [k·batch_rows, (k+1)·batch_rows). Returns the files in
+    replay order.
 
-        ts is returned as an AWARE-UTC datetime: the simple stream
-        reader hands Python rows to Spark, whose TimestampType
-        conversion interprets a NAIVE datetime in the OS-local zone
-        (time.mktime) but an aware one in its own zone (timegm) —
-        under a non-UTC OS timezone the naive form silently shifted
-        every replayed event by the UTC offset (caught by
-        tools/certify.py tz: stream_pipeline_e2e window starts moved
-        4-5h under TZ=America/New_York while the arrow-batch reader
-        and every JVM path stayed put)."""
-        t = self._sorted_table()
-        real_hi = min(hi, t.num_rows)
-        ts_i = _COLS.index("ts")
-        rows = []
-        for r in t.slice(lo, max(real_hi - lo, 0)).to_pylist():
-            row = tuple(r[c] for c in _COLS)
-            rows.append(row[:ts_i] + (_as_utc(row[ts_i]),)
-                        + row[ts_i + 1:])
-        if self.sentinel_days and hi > t.num_rows and lo <= t.num_rows:
-            rows.append(self._sentinel_row(t))
-        return rows
+    ``ts`` is stored as epoch-nanosecond longs, the layout
+    streaming/windows.EVENTS_STREAM_SCHEMA reads. Spark's file-stream
+    source orders new files by modification time, not by name, so the
+    files get strictly increasing mtimes (one second apart). The
+    directory appears atomically (written under ``<replay_dir>.tmp``,
+    then renamed) and an existing one is reused as is, so a restarted
+    query resumes over the very files its checkpoint recorded."""
+    import glob
+    import shutil
+    import time
 
-    def initialOffset(self):
-        return {"idx": 0}
-
-    def read(self, start):
-        # NB: the rows must be an ITERATOR — when the replay is drained
-        # (end == start) Spark's prefetch wrapper validates emptiness
-        # with next(it), which a plain list breaks.
-        t = self._sorted_table()
-        n = t.num_rows + (1 if self.sentinel_days else 0)
-        lo = start["idx"]
-        hi = min(lo + self.batch_rows, n)
-        if hi <= lo:
-            return (iter(()), start)
-        return (iter(self._slice(lo, hi)), {"idx": hi})
-
-    def readBetweenOffsets(self, start, end):
-        # deterministic replay: a retried batch re-reads the same slice
-        # (iterator for the same reason as read())
-        return iter(self._slice(start["idx"], end["idx"]))
-
-    def commit(self, end):
-        pass  # offsets live in the checkpoint; nothing to clean up
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    if not os.path.isdir(replay_dir):
+        t = _load_arrow(events_path).sort_by(
+            [("ts", "ascending"), ("event_id", "ascending")])
+        t = _with_sentinel(t)
+        t = t.set_column(
+            t.schema.get_field_index("ts"), "ts",
+            pc.multiply(pc.cast(t.column("ts"), "int64"), 1000))
+        tmp = replay_dir + ".tmp"
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(tmp)
+        starts = range(0, t.num_rows, batch_rows)
+        first_mtime = int(time.time()) - len(starts)
+        for k, lo in enumerate(starts):
+            f = os.path.join(tmp, f"part-{k:05d}.parquet")
+            pq.write_table(t.slice(lo, batch_rows), f)
+            os.utime(f, (first_mtime + k, first_mtime + k))
+        os.rename(tmp, replay_dir)
+    return sorted(glob.glob(os.path.join(replay_dir, "part-*.parquet")))
 
 
 class EventSimulatorDataSource(DataSource):
-    """format("sim_events"): batch scan + deterministic replay stream
-    over a driver events parquet. Options: path (required),
-    rows_per_partition (batch), batch_rows (stream)."""
+    """format("sim_events"): batch scan over a driver events parquet.
+    Options: path (required), rows_per_partition."""
 
     @classmethod
     def name(cls):
@@ -200,8 +169,6 @@ class EventSimulatorDataSource(DataSource):
     def reader(self, schema):
         return _SimBatchReader(self.options)
 
-    def simpleStreamReader(self, schema):
-        return _SimStreamReader(self.options)
 
 
 def register_sim_source(spark) -> None:
@@ -247,7 +214,6 @@ def _register_query() -> None:
     )
     def q_sim_source_event_rollup(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
-        import os
         register_sim_source(spark)
         df = (spark.read.format("sim_events")
               .option("path", os.path.join(sf_dir, "events.parquet"))

@@ -8,27 +8,37 @@ windows, sinks each have their own tests); this module composes them
 into one checkpointed Structured Streaming pipeline and certifies the
 WHOLE path against the DuckDB oracle:
 
-    sim_events replay source (deterministic offsets, sentinel-punctuated)
+    replay files (sources/simulator.write_replay: time-ordered parquet,
+      one micro-batch per file, sentinel-punctuated) → file-stream source
       → to_json wire serialization (the S4 producer shape)
       → from_json parse + corrupt routing (P12/T7,
         RealTimeAnalytics.java:65-82 — reference drops; we dead-letter)
       → segment/risk enrichment (P13/P14, EnrichmentFunction.java:38-52)
       → watermarked hourly window × event_type aggregate (A6/T4/T5)
-      → docstore sink (S7, manifest-commit protocol, idempotent epochs)
+      → docstore sink (S7: foreachBatch + Spark's JSON writer,
+        manifest-commit protocol, idempotent epochs)
 
 plus the dead-letter fan-out as a second sink query — Spark's unit of
 execution is one sink per streaming query, so the reference's dual
 Kafka+Mongo fan-out (RealTimeAnalytics.java:90-104) maps to two
-queries over the same source, each with its own checkpoint.
+queries over the same replay, each with its own checkpoint. Every
+stage runs in the JVM; no Python worker process is on the stream path.
 
 End-of-replay flush: a finite replay feeding a watermarked aggregation
 never closes its last windows (the watermark trails max observed event
-time). The sim source's ``sentinel_days`` option emits one synthetic
-row far past the last real event as the final offset; it advances the
-watermark past every real window while its OWN window never closes, so
-it is invisible in append output — no filter needed (and none wanted:
-a pre-aggregation filter gets pushed below the EventTimeWatermark node
-by Catalyst, which would hide the sentinel from the watermark tracker).
+time). The replay's last file ends with one synthetic sentinel row far
+past the last real event; it advances the watermark past every real
+window while its OWN window never closes, so it is invisible in append
+output — no filter needed (and none wanted: a pre-aggregation filter
+gets pushed below the EventTimeWatermark node by Catalyst, which would
+hide the sentinel from the watermark tracker).
+
+Drain rule: both queries run under ``Trigger.AvailableNow``, which
+fixes the input (the files present at start) and, after the last file,
+runs the no-data batch in which the sentinel-advanced watermark
+flushes state. A query has drained exactly when it terminates, so the
+runner only waits for termination (``run_to_end``); nothing polls
+progress.
 
 Scale notes (100 TB): the only stateful exchange is the window×type
 aggregation — partial aggregation map-side, state hash-partitioned on
@@ -107,90 +117,72 @@ def windowed_rollup(enriched: DataFrame, watermark: str = "1 hour") -> DataFrame
     )
 
 
-def build_pipeline(spark: SparkSession, events_path: str,
-                   batch_rows: int = 4000,
+def build_pipeline(spark: SparkSession, replay_dir: str,
                    corrupt_every: int | None = None,
-                   dead_batch_rows: int | None = None,
                    ) -> tuple[DataFrame, DataFrame]:
-    """(windowed rollup, dead-letter lines) streaming DataFrames for
-    the full topology. Callers attach sinks + checkpoints.
+    """(windowed rollup, dead-letter lines) streaming DataFrames over
+    the replay files in ``replay_dir`` (sources/simulator.write_replay).
+    Callers attach sinks + checkpoints.
 
     The two sink queries read the replay INDEPENDENTLY (each streaming
-    query owns its source offsets), so each gets the reader shape its
-    semantics need: the stateful rollup replays in ``batch_rows``
-    micro-batches with the end-of-replay sentinel (cross-batch state +
-    watermark flush); the stateless dead-letter route needs neither —
-    it drains in one big batch (``dead_batch_rows``, default the whole
-    file) with no sentinel, halving the replay's Python-source cost."""
-    from ecommerce_analytics_spark.sources.simulator import register_sim_source
-    register_sim_source(spark)
-
-    def reader(rows: int, sentinel_days: int):
-        return (spark.readStream.format("sim_events")
-                .option("path", events_path)
-                .option("batch_rows", str(rows))
-                .option("sentinel_days", str(sentinel_days))
-                .load())
-
-    agg_stream = reader(batch_rows, 30)
-    valid, _ = split_dead_letter(
-        parse_event_lines(to_wire(agg_stream, corrupt_every)))
-    dead_rows = dead_batch_rows or replay_total_offset(events_path)
-    dead_stream = reader(dead_rows, 0)
-    _, dead = split_dead_letter(
-        parse_event_lines(to_wire(dead_stream, corrupt_every)))
+    query owns its source log), so each gets the reader shape its
+    semantics need: the stateful rollup takes one file per micro-batch
+    (cross-batch state + watermark flush); the stateless dead-letter
+    route needs neither and reads every file in one batch."""
+    from ecommerce_analytics_spark.streaming.windows import streaming_events
+    valid, _ = split_dead_letter(parse_event_lines(to_wire(
+        streaming_events(spark, replay_dir, max_files_per_trigger=1),
+        corrupt_every)))
+    _, dead = split_dead_letter(parse_event_lines(to_wire(
+        streaming_events(spark, replay_dir), corrupt_every)))
     return windowed_rollup(enrich(valid)), dead
 
 
-def _drained(progress, total_offset: int, stateful: bool) -> bool:
-    """A pull-based simple stream reader has no availableNow horizon
-    (each read() advances the offset), so 'the replay is done' is a
-    client-side condition on the last committed progress: offsets
-    exhausted, and — for the stateful query — the subsequent no-data
-    batch (numInputRows == 0) has committed, which is the batch where
-    the sentinel-advanced watermark flushes every real window."""
-    if progress is None:
-        return False
-    end = progress["sources"][0]["endOffset"]
-    if isinstance(end, str):
-        # simple-reader offsets surface as the Python-dict repr
-        import ast
-        end = ast.literal_eval(end)
-    idx = end["idx"]
-    if idx < total_offset:
-        return False
-    return (progress["numInputRows"] == 0) if stateful else True
+def start_docstore_query(df: DataFrame, store: str, checkpoint: str):
+    """Start ``df`` in append mode under ``Trigger.AvailableNow``,
+    committing each epoch to the docstore at ``store`` (foreachBatch +
+    sources/docstore.write_docstore: Spark's JSON writer, manifest
+    keyed by batch id). The query ends on its own once the replay is
+    consumed; see ``run_to_end``."""
+    from ecommerce_analytics_spark.sources.docstore import write_docstore
+    return (df.writeStream.outputMode("append")
+            .foreachBatch(lambda batch, epoch:
+                          write_docstore(batch, store, epoch))
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start())
 
 
-def drain_replay(q, total_offset: int, stateful: bool = True,
-                 stop_after_first_batch: bool = False,
-                 timeout_s: float = 300.0) -> None:
-    """Run a streaming query over a sentinel-punctuated sim_events
-    replay until it is drained (see _drained), then stop it. Shared by
-    the pipeline runner and the append-mode parity tests."""
+def run_to_end(queries, timeout_s: float = 300.0) -> None:
+    """Wait for AvailableNow queries to finish. Raises a query's own
+    exception, or TimeoutError past ``timeout_s``; every query is
+    stopped on the way out.
+
+    AvailableNow fixes the end of the input when the query starts and
+    runs the no-data batch that follows the last file, which is the
+    batch where the sentinel-advanced watermark flushes every real
+    window — so termination means drained, with no progress polling."""
     import time
-    deadline = time.time() + timeout_s
-    while time.time() < deadline and q.isActive:
-        if stop_after_first_batch:
-            if q.recentProgress:
-                break
-        elif _drained(q.lastProgress, total_offset, stateful):
-            break
-        time.sleep(0.1)
-    else:
-        if q.isActive:
+    deadline = time.monotonic() + timeout_s
+    try:
+        for q in queries:
+            if not q.awaitTermination(
+                    max(deadline - time.monotonic(), 0.001)):
+                raise TimeoutError(
+                    f"stream did not finish in {timeout_s}s")
+    finally:
+        for q in queries:
             q.stop()
-            raise TimeoutError(f"stream did not drain in {timeout_s}s")
-    q.stop()
-    q.awaitTermination()
 
 
-def replay_total_offset(events_path: str) -> int:
-    """Terminal offset of a sentinel-punctuated replay of this table
-    (single file or directory-of-parts — same layout contract as the
-    sim_events source it paces)."""
+def replay_batch_rows(events_path: str) -> int:
+    """Rows per replay file for the registered e2e queries: ~8
+    micro-batches at every SF, so cross-batch state is exercised while
+    per-batch overhead (state-store commit, epoch manifest) stays
+    constant instead of growing linearly with SF. The pytest surfaces
+    use small fixed batch_rows to stress many-batch behavior."""
     from ecommerce_analytics_spark.sources.simulator import _num_rows
-    return _num_rows(events_path) + 1
+    return max(4000, _num_rows(events_path) // 8)
 
 
 def stream_width(spark: SparkSession, batch_rows: int):
@@ -201,7 +193,7 @@ def stream_width(spark: SparkSession, batch_rows: int):
 
     Rationale (round 11, guide §2.2/§5): every micro-batch pays a
     fixed per-state-partition cost — an HDFS-backed store open +
-    delta-file commit + one Python sink writer task — regardless of
+    delta-file commit + one sink writer task — regardless of
     rows held. At the session default (cluster width: 32 here) a
     12.5k-row batch holding ~455 window-state rows committed 32
     stores and launched 32 near-empty sink writers per batch;
@@ -231,6 +223,17 @@ def stream_width(spark: SparkSession, batch_rows: int):
     return _Restore()
 
 
+def _land(files: list[str], landed_dir: str) -> None:
+    """Hard-link replay files into the directory the queries read.
+    A link keeps the file's inode, so its mtime — the file source's
+    replay order — is the replay's own."""
+    os.makedirs(landed_dir, exist_ok=True)
+    for f in files:
+        dst = os.path.join(landed_dir, os.path.basename(f))
+        if not os.path.exists(dst):
+            os.link(f, dst)
+
+
 def run_pipeline(spark: SparkSession, events_path: str, run_dir: str,
                  batch_rows: int = 4000,
                  corrupt_every: int | None = None,
@@ -238,38 +241,29 @@ def run_pipeline(spark: SparkSession, events_path: str, run_dir: str,
                  timeout_s: float = 300.0) -> None:
     """Execute the topology to completion with checkpoints under
     ``run_dir``; restartable — rerunning with the same run_dir resumes
-    from the checkpointed offsets and the docstore's idempotent
-    per-epoch manifests absorb any replayed micro-batch.
+    from the checkpointed source logs over the same replay files, and
+    the docstore's idempotent per-epoch manifests absorb any replayed
+    micro-batch.
 
-    ``stop_after_first_batch`` stops each query after its first
-    committed micro-batch instead of draining — the restart-parity
-    test's mid-stream kill switch."""
-    from ecommerce_analytics_spark.sources.docstore import register_docstore_sink
-    register_docstore_sink(spark)
-    total_offset = replay_total_offset(events_path)
-    rollup, dead = build_pipeline(spark, events_path, batch_rows,
-                                  corrupt_every)
-    queries = []
+    ``stop_after_first_batch`` lands only the first replay file before
+    the queries start, so each one commits the first file's epoch and
+    stops — the restart-parity test's deterministic mid-stream kill
+    switch. The next run lands the rest."""
+    from ecommerce_analytics_spark.sources.simulator import write_replay
+    replay = write_replay(events_path, os.path.join(run_dir, "replay"),
+                          batch_rows)
+    landed = os.path.join(run_dir, "landed")
+    _land(replay[:1] if stop_after_first_batch else replay, landed)
+    rollup, dead = build_pipeline(spark, landed, corrupt_every)
     width = stream_width(spark, batch_rows)
     try:
-        for name, df, stateful, total in (
-                ("agg", rollup, True, total_offset),
-                # the dead-letter reader runs sentinel-free: its
-                # terminal offset is the raw row count
-                ("dead", dead, False, total_offset - 1)):
-            q = (df.writeStream.format("docstore")
-                 .outputMode("append")
-                 .option("path", os.path.join(run_dir, f"store_{name}"))
-                 .option("checkpointLocation",
-                         os.path.join(run_dir, f"ck_{name}"))
-                 .trigger(processingTime="0 seconds")
-                 .start())
-            queries.append((q, stateful, total))
+        queries = [start_docstore_query(
+            df, os.path.join(run_dir, f"store_{name}"),
+            os.path.join(run_dir, f"ck_{name}"))
+            for name, df in (("agg", rollup), ("dead", dead))]
     finally:
         width.restore()
-    for q, stateful, total in queries:
-        drain_replay(q, total, stateful,
-                     stop_after_first_batch, timeout_s)
+    run_to_end(queries, timeout_s)
 
 
 def read_rollup(spark: SparkSession, run_dir: str) -> DataFrame:
@@ -315,14 +309,8 @@ def _register_query() -> None:
         from ecommerce_analytics_spark.io import run_tmpdir
         run_dir = run_tmpdir("stream_e2e_")
         path = os.path.join(sf_dir, "events.parquet")
-        # scale rows-per-microbatch with the input so the replay is
-        # always ~8 micro-batches: cross-batch state is exercised at
-        # every SF while per-batch overhead (driver-side prefetch,
-        # state-store commit, epoch manifest) stays constant instead
-        # of growing linearly with SF. The pytest surfaces use small
-        # fixed batch_rows to stress many-batch behavior.
-        batch_rows = max(4000, (replay_total_offset(path) - 1) // 8)
-        run_pipeline(spark, path, run_dir, batch_rows=batch_rows)
+        run_pipeline(spark, path, run_dir,
+                     batch_rows=replay_batch_rows(path))
         return read_rollup(spark, run_dir)
 
 
@@ -370,22 +358,18 @@ def _register_session_query() -> None:
     def q_stream_sessionize_e2e(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
         from ecommerce_analytics_spark.io import run_tmpdir
-        from ecommerce_analytics_spark.sources.docstore import (
-            read_docstore, register_docstore_sink,
+        from ecommerce_analytics_spark.sources.docstore import read_docstore
+        from ecommerce_analytics_spark.sources.simulator import write_replay
+        from ecommerce_analytics_spark.streaming.windows import (
+            streaming_events,
         )
-        from ecommerce_analytics_spark.sources.simulator import (
-            register_sim_source,
-        )
-        register_sim_source(spark)
-        register_docstore_sink(spark)
         run_dir = run_tmpdir("stream_sess_")
         path = os.path.join(sf_dir, "events.parquet")
-        total = replay_total_offset(path)
-        stream = (spark.readStream.format("sim_events")
-                  .option("path", path)
-                  .option("batch_rows", str(max(4000, (total - 1) // 8)))
-                  .option("sentinel_days", "30")
-                  .load())
+        batch_rows = replay_batch_rows(path)
+        replay_dir = os.path.join(run_dir, "replay")
+        write_replay(path, replay_dir, batch_rows)
+        stream = streaming_events(spark, replay_dir,
+                                  max_files_per_trigger=1)
         agg = (
             stream
             .withWatermark("ts", "1 hour")
@@ -398,17 +382,13 @@ def _register_session_query() -> None:
             .select("user_id", "session_start", "session_end",
                     "n_events", "total_value")
         )
-        width = stream_width(spark, max(4000, (total - 1) // 8))
+        width = stream_width(spark, batch_rows)
         try:
-            q = (agg.writeStream.format("docstore")
-                 .outputMode("append")
-                 .option("path", os.path.join(run_dir, "store"))
-                 .option("checkpointLocation", os.path.join(run_dir, "ck"))
-                 .trigger(processingTime="0 seconds")
-                 .start())
+            q = start_docstore_query(agg, os.path.join(run_dir, "store"),
+                                     os.path.join(run_dir, "ck"))
         finally:
             width.restore()
-        drain_replay(q, total)
+        run_to_end([q])
         return read_docstore(
             spark, os.path.join(run_dir, "store"),
             "user_id bigint, session_start timestamp, "

@@ -26,6 +26,9 @@ EVENTS_STREAM_SCHEMA = T.StructType([
 def streaming_events(spark: SparkSession, path: str,
                      max_files_per_trigger: int | None = None) -> DataFrame:
     """File-source stream of the events table (micro-batch harness).
+    It reads events parquet whose ``ts`` is epoch-ns longs, such as
+    the replay files of sources/simulator.write_replay, which the e2e
+    stream queries consume one file per micro-batch.
 
     In production the same plan binds to a Kafka source
     (sources/kafka.py); everything downstream is identical.

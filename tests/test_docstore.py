@@ -1,4 +1,4 @@
-"""Docstore Python sink: manifest-commit protocol (batch + stream),
+"""Docstore sink: manifest-commit protocol (batch + stream),
 orphan invisibility, idempotent epoch republication, and end-to-end
 replay-stream → docstore parity."""
 
@@ -11,10 +11,10 @@ from pyspark.sql import functions as F
 
 from ecommerce_analytics_spark.io import load_table
 from ecommerce_analytics_spark.sources.docstore import (
-    read_docstore, register_docstore_sink,
+    read_docstore, write_docstore,
 )
 from ecommerce_analytics_spark.sources.simulator import (
-    SIM_SCHEMA, register_sim_source,
+    SENTINEL_EVENT_TYPE, SIM_SCHEMA,
 )
 
 
@@ -28,11 +28,9 @@ def _fingerprint(df):
 
 def test_docstore_batch_roundtrip_and_orphan_invisibility(
         spark, sf_dir, tmp_path):
-    register_docstore_sink(spark)
     out = str(tmp_path / "store")
     events = load_table(spark, sf_dir, "events").drop("props")
-    (events.write.format("docstore").option("path", out)
-     .mode("append").save())
+    write_docstore(events, out)
 
     schema = ("event_id bigint, ts timestamp, user_id bigint, "
               "event_type string, value double")
@@ -51,33 +49,29 @@ def test_docstore_batch_roundtrip_and_orphan_invisibility(
 
 
 def test_docstore_stream_idempotent_epochs(spark, sf_dir, tmp_path):
-    """sim_events replay → docstore stream sink; a re-run from a FRESH
+    """replay stream → docstore stream sink; a re-run from a FRESH
     checkpoint re-publishes the same epochs — manifests keyed by batch
     id overwrite, so committed content stays exactly one copy."""
-    register_sim_source(spark)
-    register_docstore_sink(spark)
+    from ecommerce_analytics_spark.sources.simulator import write_replay
+    from ecommerce_analytics_spark.streaming.e2e_pipeline import (
+        run_to_end, start_docstore_query,
+    )
+    from ecommerce_analytics_spark.streaming.windows import (
+        streaming_events,
+    )
     out = str(tmp_path / "store")
     events = load_table(spark, sf_dir, "events")
     n_ref = events.count()
     schema = SIM_SCHEMA
+    replay_dir = str(tmp_path / "replay")
+    write_replay(os.path.join(sf_dir, "events.parquet"), replay_dir, 400)
 
     def run(ckpt):
-        q = (spark.readStream.format("sim_events")
-             .option("path", os.path.join(sf_dir, "events.parquet"))
-             .option("batch_rows", "400").load()
-             .writeStream.format("docstore").option("path", out)
-             .option("checkpointLocation", ckpt)
-             .trigger(processingTime="0 seconds").start())
-        import time as _time
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
-            try:
-                if read_docstore(spark, out, schema).count() >= n_ref:
-                    break
-            except Exception:
-                pass
-            _time.sleep(1)
-        q.stop()
+        stream = (streaming_events(spark, replay_dir,
+                                   max_files_per_trigger=1)
+                  .filter(~F.col("event_type")
+                          .eqNullSafe(SENTINEL_EVENT_TYPE)))
+        run_to_end([start_docstore_query(stream, out, ckpt)], 120)
 
     run(str(tmp_path / "ckpt1"))
     got1 = read_docstore(spark, out, schema)
@@ -96,31 +90,27 @@ def test_docstore_failed_job_publishes_nothing(spark, tmp_path):
     empty: staged files may exist, but no manifest references them."""
     import pytest
 
-    register_docstore_sink(spark)
     out = str(tmp_path / "store")
     # make the TASK itself fail: divide raises under ANSI for id==0
     bad = spark.range(100).select(
         (F.lit(100) / F.col("id")).alias("boom"))
     with pytest.raises(Exception):
-        (bad.write.format("docstore").option("path", out)
-         .mode("append").save())
+        write_docstore(bad, out)
     # nothing published → reader sees an empty store
     got = read_docstore(spark, out, "boom double")
     assert got.count() == 0
 
 
 def test_vacuum_removes_only_orphans(spark, sf_dir, tmp_path):
-    """Vacuum drops unreferenced staging files and provably changes
+    """Vacuum drops unreferenced staging entries and provably changes
     no query result (fingerprint identical before/after)."""
     from ecommerce_analytics_spark.sources.docstore import (
         vacuum_docstore,
     )
 
-    register_docstore_sink(spark)
     out = str(tmp_path / "store")
     events = load_table(spark, sf_dir, "events").drop("props")
-    (events.write.format("docstore").option("path", out)
-     .mode("append").save())
+    write_docstore(events, out)
     # plant two orphans (a failed attempt, a superseded epoch file)
     for orphan in ("part-00042-tid999-stream.jsonl",
                    "part-00001-tid998-batch.jsonl"):
@@ -135,6 +125,15 @@ def test_vacuum_removes_only_orphans(spark, sf_dir, tmp_path):
     assert before == after
     # idempotent: second vacuum removes nothing
     assert vacuum_docstore(out)["removed"] == 0
+    # an unpublished attempt directory (a failed job's JSON output) is
+    # an orphan too; the published attempt directory stays
+    failed = os.path.join(out, "_staging", "0123abcd")
+    os.makedirs(failed)
+    with open(os.path.join(failed, "part-00000-x.json"), "w") as f:
+        f.write("{}\n")
+    assert vacuum_docstore(out) == {"kept": stats["kept"], "removed": 1}
+    assert not os.path.exists(failed)
+    assert _fingerprint(read_docstore(spark, out, schema)) == before
 
 
 def test_time_travel_pins_manifest_versions(spark, sf_dir, tmp_path):
@@ -145,7 +144,6 @@ def test_time_travel_pins_manifest_versions(spark, sf_dir, tmp_path):
     from ecommerce_analytics_spark.sources.docstore import (
         docstore_versions, vacuum_docstore)
 
-    register_docstore_sink(spark)
     out = str(tmp_path / "store")
     events = load_table(spark, sf_dir, "events").drop("props")
     first = events.filter(F.col("event_id") % 2 == 0)
@@ -153,13 +151,11 @@ def test_time_travel_pins_manifest_versions(spark, sf_dir, tmp_path):
     schema = ("event_id bigint, ts timestamp, user_id bigint, "
               "event_type string, value double")
 
-    (first.write.format("docstore").option("path", out)
-     .mode("append").save())
+    write_docstore(first, out)
     assert len(docstore_versions(out)) == 1
     v0 = _fingerprint(read_docstore(spark, out, schema))
 
-    (second.write.format("docstore").option("path", out)
-     .mode("append").save())
+    write_docstore(second, out)
     assert len(docstore_versions(out)) == 2
 
     # pinned version unchanged by the later commit
@@ -217,7 +213,6 @@ def test_format_version_file_lifecycle(spark, sf_dir, tmp_path):
         store_format_version,
     )
 
-    register_docstore_sink(spark)
     events = load_table(spark, sf_dir, "events").drop("props").limit(10)
     schema = ("event_id bigint, ts timestamp, user_id bigint, "
               "event_type string, value double")
@@ -225,8 +220,7 @@ def test_format_version_file_lifecycle(spark, sf_dir, tmp_path):
     # --- new store: stamped v2 at first commit, as_of works
     new_store = str(tmp_path / "new_store")
     assert store_format_version(new_store) is None
-    (events.write.format("docstore").option("path", new_store)
-     .mode("append").save())
+    write_docstore(events, new_store)
     assert store_format_version(new_store) == FORMAT_VERSION == 2
     assert os.path.exists(os.path.join(new_store, "_format_version"))
     assert len(read_docstore(spark, new_store, schema, as_of=0)
@@ -243,10 +237,8 @@ def test_format_version_file_lifecycle(spark, sf_dir, tmp_path):
 
     # a later WELL-FORMED commit appends fine but stamps the store v1:
     # the break is now pinned by version, not by filename sniffing
-    (spark.createDataFrame([(1, None, 1, "x", 1.0)], schema)
-     .coalesce(1)
-     .write.format("docstore").option("path", str(legacy))
-     .mode("append").save())
+    write_docstore(spark.createDataFrame([(1, None, 1, "x", 1.0)], schema)
+                   .coalesce(1), str(legacy))
     assert store_format_version(str(legacy)) == 1   # sticky
     assert len(docstore_versions(str(legacy))) == 2
     with pytest.raises(ValueError, match="format version 1"):
@@ -255,10 +247,8 @@ def test_format_version_file_lifecycle(spark, sf_dir, tmp_path):
     assert len(committed_files(str(legacy))) == 2
 
     # the stamp itself is never rewritten by further commits
-    (spark.createDataFrame([(2, None, 2, "y", 2.0)], schema)
-     .coalesce(1)
-     .write.format("docstore").option("path", str(legacy))
-     .mode("append").save())
+    write_docstore(spark.createDataFrame([(2, None, 2, "y", 2.0)], schema)
+                   .coalesce(1), str(legacy))
     assert store_format_version(str(legacy)) == 1
 
 

@@ -51,8 +51,9 @@ def _rows(df):
 
 def test_pipeline_restart_mid_stream_matches_uninterrupted(
         spark, sf_dir, tmp_path):
-    """Kill both queries after their first committed micro-batch, then
-    restart from the same checkpoints and drain: the final store must
+    """Stop both queries after their first committed micro-batch (only
+    the first replay file is landed), then restart from the same
+    checkpoints with the rest landed and drain: the final store must
     equal the batch truth exactly — offsets resume, no window is lost
     or duplicated, and any replayed epoch is absorbed by the docstore's
     idempotent per-batch manifests."""
@@ -104,18 +105,13 @@ def test_streaming_session_window_append_gap_close_parity(
     never closes and must not appear."""
     from ecommerce_analytics_spark.plans.registry import query_map
     from ecommerce_analytics_spark.numerics import money_sum
-    from ecommerce_analytics_spark.sources.simulator import (
-        register_sim_source,
-    )
-    from ecommerce_analytics_spark.streaming.e2e_pipeline import (
-        drain_replay, replay_total_offset,
-    )
+    from ecommerce_analytics_spark.sources.simulator import write_replay
+    from ecommerce_analytics_spark.streaming.e2e_pipeline import run_to_end
+    from ecommerce_analytics_spark.streaming.windows import streaming_events
 
-    register_sim_source(spark)
-    path = _events_path(sf_dir)
-    stream = (spark.readStream.format("sim_events")
-              .option("path", path).option("batch_rows", "250")
-              .option("sentinel_days", "30").load())
+    replay_dir = str(tmp_path / "replay")
+    write_replay(_events_path(sf_dir), replay_dir, 250)
+    stream = streaming_events(spark, replay_dir, max_files_per_trigger=1)
     agg = (
         stream
         .withWatermark("ts", "1 hour")
@@ -130,8 +126,8 @@ def test_streaming_session_window_append_gap_close_parity(
     q = (agg.writeStream.format("memory").queryName("sess_append")
          .outputMode("append")
          .option("checkpointLocation", str(tmp_path / "sess_ck"))
-         .trigger(processingTime="0 seconds").start())
-    drain_replay(q, replay_total_offset(path))
+         .trigger(availableNow=True).start())
+    run_to_end([q])
     got = _rows(spark.sql("SELECT * FROM sess_append"))
     truth = _rows(query_map()["sessionize_native"](spark, sf_dir))
     assert got == truth
@@ -154,8 +150,8 @@ def test_sentinel_invisible_in_output(spark, sf_dir, tmp_path):
 
 
 def test_pipeline_source_error_raises_not_hangs(spark, tmp_path):
-    """A broken source must surface as an exception from the drain
-    loop (the query dies -> awaitTermination re-raises), never as a
+    """A broken source must surface as an exception (from the replay
+    writer, or from awaitTermination when a query dies), never as a
     silent wait-until-timeout."""
     import pytest
 

@@ -83,3 +83,9 @@ def test_rewritten_file_is_inferred_again(spark, tmp_path):
     df = load_table(spark, str(tmp_path), "t")
     assert df.columns == ["a", "b", "c"]
     assert [tuple(r) for r in df.collect()] == [(3, "z", 1.5)]
+
+
+def test_session_shows_no_console_progress(spark):
+    # progress bars on stderr interleave with sweep/certify records
+    assert spark.sparkContext.getConf().get(
+        "spark.ui.showConsoleProgress") == "false"

@@ -1,6 +1,7 @@
-"""Python DataSource event simulator: batch scan equals the parquet
-scan exactly; streaming replay is deterministic, time-ordered, and
-checkpoint-resumable by construction (offset = sorted row index)."""
+"""Event simulator: the Python DataSource batch scan equals the parquet
+scan exactly; the replay files (sources/simulator.write_replay) stream
+through Spark's file source deterministically and in time order, one
+file per micro-batch."""
 
 from __future__ import annotations
 
@@ -10,12 +11,28 @@ from pyspark.sql import functions as F
 
 from ecommerce_analytics_spark.io import load_table
 from ecommerce_analytics_spark.sources.simulator import (
-    register_sim_source,
+    SENTINEL_EVENT_TYPE, register_sim_source, write_replay,
 )
+from ecommerce_analytics_spark.streaming.e2e_pipeline import run_to_end
+from ecommerce_analytics_spark.streaming.windows import streaming_events
 
 
 def _events_path(sf_dir: str) -> str:
     return os.path.join(sf_dir, "events.parquet")
+
+
+def _replay(spark, sf_dir, tmp_path, batch_rows, sink, ckpt):
+    """Replay the events through the file source under AvailableNow,
+    one file per micro-batch, into a foreachBatch sink that sees only
+    real events (the end-of-replay sentinel is filtered out)."""
+    replay_dir = str(tmp_path / f"replay_{ckpt}")
+    write_replay(_events_path(sf_dir), replay_dir, batch_rows)
+    q = (streaming_events(spark, replay_dir, max_files_per_trigger=1)
+         .filter(~F.col("event_type").eqNullSafe(SENTINEL_EVENT_TYPE))
+         .writeStream.foreachBatch(sink)
+         .option("checkpointLocation", str(tmp_path / ckpt))
+         .trigger(availableNow=True).start())
+    run_to_end([q], 120)
 
 
 def test_sim_batch_equals_parquet_scan(spark, sf_dir):
@@ -40,7 +57,6 @@ def test_sim_batch_equals_parquet_scan(spark, sf_dir):
 
 
 def test_sim_stream_replays_in_time_order(spark, sf_dir, tmp_path):
-    register_sim_source(spark)
     batch_rows = 300  # sf0.001 events = 1000 rows → 4 micro-batches
     out = str(tmp_path / "replay_out")
 
@@ -49,26 +65,7 @@ def test_sim_stream_replays_in_time_order(spark, sf_dir, tmp_path):
          .write.mode("append").parquet(out))
 
     ref = load_table(spark, sf_dir, "events")
-    n_ref = ref.count()
-    # a pull-based simple stream reader has no "available now" horizon
-    # (each read() advances the offset) — run the micro-batch loop and
-    # stop once the replay has drained
-    q = (spark.readStream.format("sim_events")
-         .option("path", _events_path(sf_dir))
-         .option("batch_rows", str(batch_rows)).load()
-         .writeStream.foreachBatch(sink)
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(processingTime="0 seconds").start())
-    import time as _time
-    deadline = _time.time() + 120
-    while _time.time() < deadline:
-        try:
-            if spark.read.parquet(out).count() >= n_ref:
-                break
-        except Exception:
-            pass  # sink dir not created yet
-        _time.sleep(1)
-    q.stop()
+    _replay(spark, sf_dir, tmp_path, batch_rows, sink, "ckpt")
     got = spark.read.parquet(out)
     assert got.count() == ref.count()
     # same multiset of event ids, each exactly once
@@ -89,14 +86,13 @@ def test_sim_stream_through_enrichment_pipeline(spark, sf_dir,
                                                 tmp_path):
     """The reference's full real-time loop (simulator → broker →
     enrichment → store, RealTimeAnalytics.java) end-to-end inside the
-    engine: sim_events replay stream → segment/risk enrichment →
+    engine: replay stream → segment/risk enrichment →
     idempotent parquet sink, row-for-row equal to the same enrichment
     over the batch parquet scan."""
     from ecommerce_analytics_spark.operators.events_enrichment import (
         risk_expr, segment_expr,
     )
 
-    register_sim_source(spark)
     out = str(tmp_path / "enriched")
 
     def sink(batch_df, batch_id):
@@ -110,22 +106,7 @@ def test_sim_stream_through_enrichment_pipeline(spark, sf_dir,
 
     ref = load_table(spark, sf_dir, "events")
     n_ref = ref.count()
-    q = (spark.readStream.format("sim_events")
-         .option("path", _events_path(sf_dir))
-         .option("batch_rows", "400").load()
-         .writeStream.foreachBatch(sink)
-         .option("checkpointLocation", str(tmp_path / "ckpt2"))
-         .trigger(processingTime="0 seconds").start())
-    import time as _time
-    deadline = _time.time() + 120
-    while _time.time() < deadline:
-        try:
-            if spark.read.parquet(out).count() >= n_ref:
-                break
-        except Exception:
-            pass
-        _time.sleep(1)
-    q.stop()
+    _replay(spark, sf_dir, tmp_path, 400, sink, "ckpt2")
 
     got = spark.read.parquet(out).drop("batch_id")
     want = (ref.withColumn("user_segment", segment_expr())

@@ -26,8 +26,10 @@ Protocol, per (topology × state-store provider):
    completion. Gate: final sink value-hash == baseline hash, and the
    sink row count matches (no duplicate epoch, no lost window).
 
-Topologies: the full e2e pipeline (sim_events replay → parse/DLQ →
-watermarked hourly window agg → idempotent docstore sink — the
+Topologies: the full e2e pipeline (file-source replay of the
+time-ordered replay files under AvailableNow → parse/DLQ →
+watermarked hourly window agg → idempotent docstore sink, whose
+foreachBatch epochs are keyed by batch id — the
 reference's mounted-but-never-configured Flink checkpoint volume,
 docker-compose.yaml:205), and the ltv ValueState twin
 (EnrichmentFunction.java ↔ streaming/ltv_state.py:88) through the

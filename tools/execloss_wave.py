@@ -17,8 +17,9 @@ it. Two legs, each proven in-window:
    checksum (count + sum of xxhash64 over all columns — order-free,
    exact: every output value is deterministic per ROWORDER waves)
    is IDENTICAL to an undisturbed local-cluster run.
-2. **Streaming** — the e2e pipeline topology (watermarked window agg +
-   dead-letter split + docstore sink) under RocksDB+changelog, one
+2. **Streaming** — the e2e pipeline topology (file-source replay under
+   AvailableNow, watermarked window agg + dead-letter split +
+   foreachBatch docstore sink) under RocksDB+changelog, one
    executor SIGKILLed mid-stream. Gate: recovered rollup value_hash
    equals the undisturbed run AND the DuckDB-oracle-certified result
    shape (rows > 0, dead rows equal).

@@ -12,8 +12,9 @@ keyed-state surface through the production backend, three prongs:
 1. **Twin hash-parity** — all 13 ``applyInPandasWithState`` twins
    (ltv, funnel, cohort, cusum, ewma, hw, growth, transition,
    attribution, psi, kmv, sample, neardup-gate) plus the full e2e
-   pipeline topology (watermarked window agg + dead-letter split +
-   docstore sink) run THREE times in fresh JVMs — heap, RocksDB with
+   pipeline topology (file-source replay under AvailableNow,
+   watermarked window agg + dead-letter split + foreachBatch docstore
+   sink) run THREE times in fresh JVMs — heap, RocksDB with
    per-commit snapshots, and RocksDB with CHANGELOG checkpointing
    (the modern production default, a different commit/restore path) —
    via ``SPARK_GRAFT_EXTRA_CONF``, same hook as the AQE-skew wave,
@@ -25,9 +26,11 @@ keyed-state surface through the production backend, three prongs:
    the checkpoint state dir: ``.sst`` snapshots vs ``.changelog``
    commits) while the heap run proves ``.delta`` files and neither
    RocksDB kind — conf-set-but-ignored cannot pass.
-2. **Checkpoint-restart under RocksDB** — the e2e pipeline is stopped
-   after its first committed micro-batch (the replay-sinks kill
-   switch) and resumed from the RocksDB checkpoint; the final rollup
+2. **Checkpoint-restart under RocksDB** — the e2e pipeline first runs
+   with only its first replay file landed, so each query commits that
+   one epoch and ends (``run_pipeline(stop_after_first_batch=True)``),
+   and is then resumed from the RocksDB checkpoint with the rest
+   landed; the final rollup
    must hash-match the uninterrupted run under ALL THREE configs —
    the changelog leg's restart REPLAYS the changelog over the last
    snapshot, the recovery path a production cluster actually runs.
@@ -255,8 +258,9 @@ def worker(out_path: str, sf_dir: str) -> None:
 
     def e2e(run_dir, restart: bool):
         if restart:
-            # kill switch: stop each query after its FIRST committed
-            # micro-batch, then resume from the checkpoint to drain
+            # mid-stream stop: only the first replay file is landed,
+            # so each query ends after its FIRST committed epoch; the
+            # second run lands the rest and resumes from the checkpoint
             run_pipeline(spark, ev_path, run_dir, batch_rows=400,
                          stop_after_first_batch=True)
             run_pipeline(spark, ev_path, run_dir, batch_rows=400)

@@ -76,33 +76,44 @@ def _cost_flatness(batches: list[dict]) -> float | None:
     return round(second / max(first, 1), 3)
 
 
+def _replay_to_parquet(spark, sf_dir: str, run_dir: str, batch_rows: int,
+                       topology):
+    """Replay the events table (sources/simulator.write_replay: one
+    time-ordered file of ``batch_rows`` rows per micro-batch, the
+    end-of-replay sentinel last) through ``topology`` into a parquet
+    sink under ``run_dir`` under AvailableNow; returns the per-batch
+    progress records."""
+    from ecommerce_analytics_spark.sources.simulator import write_replay
+    from ecommerce_analytics_spark.streaming.e2e_pipeline import run_to_end
+    from ecommerce_analytics_spark.streaming.windows import streaming_events
+
+    replay_dir = os.path.join(run_dir, "replay")
+    write_replay(os.path.join(sf_dir, "events.parquet"), replay_dir,
+                 batch_rows)
+    stream = streaming_events(spark, replay_dir, max_files_per_trigger=1)
+    q = (topology(stream).writeStream.format("parquet")
+         .outputMode("append")
+         .option("path", os.path.join(run_dir, "out"))
+         .option("checkpointLocation", os.path.join(run_dir, "ck"))
+         .trigger(availableNow=True)
+         .start())
+    run_to_end([q], timeout_s=1800.0)
+    return _progress_records(q)
+
+
 def run_ltv_volume(spark, sf_dir: str, batch_rows: int = 50_000) -> dict:
     """streaming_ltv over the full events table in bounded batches;
     parity: last emission per user == final_ltv_per_user batch agg."""
     from ecommerce_analytics_spark.sources.simulator import (
-        register_sim_source)
-    from ecommerce_analytics_spark.streaming.e2e_pipeline import (
-        drain_replay, replay_total_offset)
+        SENTINEL_EVENT_TYPE)
     from ecommerce_analytics_spark.streaming.ltv_state import streaming_ltv
 
-    register_sim_source(spark)
-    path = os.path.join(sf_dir, "events.parquet")
-    total = replay_total_offset(path) - 1  # no sentinel for NoTimeout state
     run_dir = tempfile.mkdtemp(prefix="ltv_volume_")
-    stream = (spark.readStream.format("sim_events")
-              .option("path", path)
-              .option("batch_rows", str(batch_rows))
-              .option("sentinel_days", "0")
-              .load())
-    out = streaming_ltv(stream)
-    q = (out.writeStream.format("parquet")
-         .outputMode("append")
-         .option("path", os.path.join(run_dir, "out"))
-         .option("checkpointLocation", os.path.join(run_dir, "ck"))
-         .trigger(processingTime="0 seconds")
-         .start())
-    drain_replay(q, total, timeout_s=1800.0)
-    batches = _progress_records(q)
+    # NoTimeout keyed state needs no watermark flush: drop the sentinel
+    batches = _replay_to_parquet(
+        spark, sf_dir, run_dir, batch_rows,
+        lambda s: streaming_ltv(s.filter(
+            ~F.col("event_type").eqNullSafe(SENTINEL_EVENT_TYPE))))
 
     got = spark.read.parquet(os.path.join(run_dir, "out"))
     from pyspark.sql import Window
@@ -143,41 +154,25 @@ def run_sessionize_volume(spark, sf_dir: str,
     state rows << total sessions emitted (watermark eviction)."""
     from ecommerce_analytics_spark.numerics import money_sum
     from ecommerce_analytics_spark.plans.registry import all_queries
-    from ecommerce_analytics_spark.sources.simulator import (
-        register_sim_source)
-    from ecommerce_analytics_spark.streaming.e2e_pipeline import (
-        drain_replay, replay_total_offset)
     from ecommerce_analytics_spark.testing import (
         compare_frames, duckdb_oracle)
 
-    register_sim_source(spark)
-    path = os.path.join(sf_dir, "events.parquet")
-    total = replay_total_offset(path)
+    def sessionize(stream):
+        return (
+            stream
+            .withWatermark("ts", "1 hour")
+            .groupBy("user_id",
+                     F.session_window("ts", "30 minutes").alias("w"))
+            .agg(F.min("ts").alias("session_start"),
+                 F.max("ts").alias("session_end"),
+                 F.count(F.lit(1)).cast("long").alias("n_events"),
+                 money_sum("value").alias("total_value"))
+            .select("user_id", "session_start", "session_end",
+                    "n_events", "total_value"))
+
     run_dir = tempfile.mkdtemp(prefix="sess_volume_")
-    stream = (spark.readStream.format("sim_events")
-              .option("path", path)
-              .option("batch_rows", str(batch_rows))
-              .option("sentinel_days", "30")
-              .load())
-    agg = (
-        stream
-        .withWatermark("ts", "1 hour")
-        .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
-        .agg(F.min("ts").alias("session_start"),
-             F.max("ts").alias("session_end"),
-             F.count(F.lit(1)).cast("long").alias("n_events"),
-             money_sum("value").alias("total_value"))
-        .select("user_id", "session_start", "session_end",
-                "n_events", "total_value")
-    )
-    q = (agg.writeStream.format("parquet")
-         .outputMode("append")
-         .option("path", os.path.join(run_dir, "out"))
-         .option("checkpointLocation", os.path.join(run_dir, "ck"))
-         .trigger(processingTime="0 seconds")
-         .start())
-    drain_replay(q, total, timeout_s=1800.0)
-    batches = _progress_records(q)
+    batches = _replay_to_parquet(spark, sf_dir, run_dir, batch_rows,
+                                 sessionize)
 
     got = spark.read.parquet(os.path.join(run_dir, "out")).toPandas()
     oracle = duckdb_oracle(
